@@ -1322,47 +1322,32 @@ FROM unk, valch, resch, res2, invagg
 """
 
 
-def _minhash_sql(
-    num_hashes: int = 16, bands: int = 4, shingle: int = 4, hash_scheme: str = "affine"
-) -> str:
+def _minhash_sql(num_hashes: int = 16, bands: int = 4, shingle: int = 4) -> str:
     rows = num_hashes // bands
-    if hash_scheme == "affine":
-        # universal-hash family over a 60-bit md5-prefix base hash; the
-        # (a, b) literals come from the SAME generator the operator uses
-        # (dedup.minhash_affine_coeffs), and CAST('0x'||hex AS BIGINT) ==
-        # Spark's conv(hex,16,10) — verified value-identical
-        from fs_crawler_spark.operators.dedup import (
-            MINHASH_PRIME,
-            minhash_affine_coeffs,
-        )
+    # universal-hash family over a 60-bit md5-prefix base hash; the (a, b)
+    # literals come from the SAME generator the operator uses
+    # (dedup.minhash_affine_coeffs), and CAST('0x'||hex AS BIGINT) ==
+    # Spark's conv(hex,16,10) — verified value-identical
+    from fs_crawler_spark.operators.dedup import (
+        MINHASH_PRIME,
+        minhash_affine_coeffs,
+    )
 
-        sig_terms = ", ".join(
-            f"list_aggregate(list_transform(xs, x -> ({a} * x + {b}) % {MINHASH_PRIME}), 'min')"
-            for a, b in minhash_affine_coeffs(num_hashes)
-        )
-        xs_expr = (
-            "list_transform(shingles, s -> CAST('0x' || substr(md5(s), 1, 15) "
-            f"AS BIGINT) % {MINHASH_PRIME})"
-        )
-        sigs_cte = (
-            "sigs AS (\n"
-            "  SELECT doc_id, list_distinct(shingles) AS shingle_set, "
-            f"[{sig_terms}] AS sig\n"
-            f"  FROM (SELECT doc_id, shingles, {xs_expr} AS xs FROM sh)\n"
-            ")"
-        )
-    else:
-        sig_terms = ", ".join(
-            f"list_aggregate(list_transform(shingles, s -> md5('{j}:' || s)), 'min')"
-            for j in range(num_hashes)
-        )
-        sigs_cte = (
-            "sigs AS (\n"
-            "  SELECT doc_id, list_distinct(shingles) AS shingle_set, "
-            f"[{sig_terms}] AS sig\n"
-            "  FROM sh\n"
-            ")"
-        )
+    sig_terms = ", ".join(
+        f"list_aggregate(list_transform(xs, x -> ({a} * x + {b}) % {MINHASH_PRIME}), 'min')"
+        for a, b in minhash_affine_coeffs(num_hashes)
+    )
+    xs_expr = (
+        "list_transform(shingles, s -> CAST('0x' || substr(md5(s), 1, 15) "
+        f"AS BIGINT) % {MINHASH_PRIME})"
+    )
+    sigs_cte = (
+        "sigs AS (\n"
+        "  SELECT doc_id, list_distinct(shingles) AS shingle_set, "
+        f"[{sig_terms}] AS sig\n"
+        f"  FROM (SELECT doc_id, shingles, {xs_expr} AS xs FROM sh)\n"
+        ")"
+    )
     band_rows = "\nUNION ALL\n".join(
         f"SELECT doc_id, shingle_set, "
         f"md5('{b}' || '|' || array_to_string(list_slice(sig, {b * rows + 1}, {b * rows + rows}), '|')) AS bucket FROM sigs"

@@ -21,7 +21,9 @@ Layout:
     sources.csv_compat reference-schema CSV exporter/reader
     operators.frontier   seen-set anti-join dedup (F1/F2/F7)
     operators.politeness per-host budget window + skew salting (B1/B3/O5)
-    operators.bloom      sharded advisory bloom pre-filter (§2.9 UDAF-analog)
+    operators.bloom      sharded advisory bloom pre-filter for the streaming
+                         ingest (§2.9 UDAF-analog; the crawl loop's seen
+                         anti-join is exact and needs none)
     operators.robots     robots.txt disallow gate
     operators.graph      resolution rule (A4), horizon counts (A2/A3),
                          validator pivots (A5-A7), hop filter (J6)

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 
 def robots_gate(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Drop candidate urls whose path starts with a disallowed prefix."""
+    """Drop candidate urls whose path starts with a disallowed prefix.
+    Keeps the input's column order (the host join would move ``host`` first)."""
     if robots is None:
         return candidates
     per_host = robots.groupBy("host").agg(
@@ -28,5 +29,5 @@ def robots_gate(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
     return (
         candidates.join(F.broadcast(per_host), on="host", how="left")
         .filter(F.col("_disallow").isNull() | ~blocked)
-        .drop("_disallow")
+        .select(*candidates.columns)
     )

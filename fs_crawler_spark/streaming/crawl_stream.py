@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..plans.crawl import CrawlConfig, crawl_round, seed_frontier
 from ..operators.frontier import anti_join_seen, dedup_frontier
+from ..operators.robots import robots_gate
 from ..sources.fetcher import Fetcher
 
 FRONTIER_DDL = (
@@ -104,8 +105,10 @@ def start_crawl_stream(
     cfg = cfg or CrawlConfig()
     dirs = StreamDirs.under(workdir)
     os.makedirs(dirs.frontier, exist_ok=True)
-    # the seed list is just the first frontier file
-    seed_frontier(spark, seeds).coalesce(1).write.mode("append").parquet(dirs.frontier)
+    # the seed list is just the first frontier file, robots-gated like every
+    # later frontier row (a blocked seed is never fetched)
+    seed_rows = robots_gate(seed_frontier(spark, seeds), robots)
+    seed_rows.coalesce(1).write.mode("append").parquet(dirs.frontier)
 
     seen_ddl = FRONTIER_DDL + ", shard int"
 

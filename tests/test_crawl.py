@@ -2,11 +2,18 @@
 (tests/util/test_db_reader.py): small corpus -> N rounds -> exact tables."""
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from fs_crawler_spark.functions.urls import url_host
-from fs_crawler_spark.plans.crawl import CrawlConfig, read_output, run_crawl
+from fs_crawler_spark.plans.crawl import (
+    CrawlConfig,
+    load_frontier,
+    read_output,
+    run_crawl,
+)
 from fs_crawler_spark.sources.corpus import build_pages, doc_url
+from fs_crawler_spark.sources.fetcher import CorpusJoinFetcher
 
 
 def expected_bfs(n: int, seeds: list[int], max_rounds: int) -> dict[int, int]:
@@ -163,31 +170,6 @@ def test_resume_rederives_lost_totals(spark, pages120, tmp_path):
     assert totals[1]["duration"] == 0.0  # unrecoverable, zeroed
 
 
-def test_bloom_resume_param_mismatch_rebuilds(spark, pages120, tmp_path):
-    """Resuming with a different n_shards must NOT silently re-fetch seen
-    urls (blobs keyed by old shards would flag everything definitely-new):
-    the reload validates params against the manifest and rebuilds."""
-    plain = str(tmp_path / "plain")
-    run_crawl(spark, pages120, [doc_url(0)], plain, CrawlConfig(max_rounds=4))
-
-    d = str(tmp_path / "b")
-    run_crawl(
-        spark, pages120, [doc_url(0)], d,
-        CrawlConfig(max_rounds=2, use_bloom=True, n_shards=8),
-    )
-    run_crawl(
-        spark, pages120, [doc_url(0)], d,
-        CrawlConfig(max_rounds=4, use_bloom=True, n_shards=4),
-    )
-    for table in ("vertices", "edges"):
-        a = sorted(map(tuple, read_output(spark, plain, table).collect()))
-        b = sorted(map(tuple, read_output(spark, d, table).collect()))
-        assert a == b, table
-    # fetch-exactly-once invariant: no url appears twice
-    v = read_output(spark, d, "vertices")
-    assert v.count() == v.select("id").distinct().count()
-
-
 def test_frontier_delta_mode_identical_and_resumable(spark, pages120, tmp_path):
     """Delta-frontier commits (auto under a host budget) must produce
     byte-identical tables and crawl ordering vs full rewrites, and resume
@@ -209,8 +191,6 @@ def test_frontier_delta_mode_identical_and_resumable(spark, pages120, tmp_path):
         b = sorted(map(tuple, read_output(spark, dl, table).collect()))
         assert a == b, table
     # reconstructed frontier == committed full frontier, row for row
-    from fs_crawler_spark.plans.crawl import load_frontier
-
     fa = sorted(map(tuple, load_frontier(spark, rw).collect()))
     fb = sorted(map(tuple, load_frontier(spark, dl).collect()))
     assert fa == fb
@@ -242,26 +222,91 @@ def test_frontier_delta_mode_identical_and_resumable(spark, pages120, tmp_path):
         assert a == b, f"resume {table}"
 
 
-def test_frontier_pin_modes_identical(spark, pages120, tmp_path):
-    """frontier_pin is a pure performance knob: delta-mode outputs must be
-    identical with and without the per-round reconstruction persist."""
-    from fs_crawler_spark.plans.crawl import read_output
+def _crawl_state(spark, ckpt):
+    state = {
+        t: sorted(map(tuple, read_output(spark, ckpt, t).collect()))
+        for t in ("vertices", "edges", "seen")
+    }
+    state["frontier"] = sorted(map(tuple, load_frontier(spark, ckpt).collect()))
+    return state
 
-    outs = {}
-    for pin in ("off", "disk"):
-        ck = str(tmp_path / pin)
-        run_crawl(
-            spark,
-            pages120,
-            [doc_url(0)],
-            ck,
-            CrawlConfig(
-                max_rounds=30, host_budget=5,
-                frontier_mode="delta", frontier_pin=pin,
-            ),
+
+def test_robots_blocked_seed_is_never_fetched(spark, pages120, tmp_path):
+    """A robots-blocked seed is gated out of the seed frontier like any
+    other blocked url. Otherwise it sits in the frontier until rediscovered,
+    enters seen as blocked, and then full-frontier rounds keep (and fetch)
+    it while delta rounds tombstone it."""
+    robots = spark.createDataFrame(
+        [("hub.example.com", "/doc/3")], "host string, disallow_prefix string"
+    )
+    seeds = [doc_url(0), doc_url(3)]
+
+    def crawl(name, mode, max_rounds):
+        d = str(tmp_path / name)
+        cfg = CrawlConfig(max_rounds=max_rounds, host_budget=1, frontier_mode=mode)
+        run_crawl(spark, pages120, seeds, d, cfg, robots=robots)
+        return d
+
+    rewrite = _crawl_state(spark, crawl("rewrite", "rewrite", 3))
+    assert doc_url(3) not in {v[0] for v in rewrite["vertices"]}
+    assert _crawl_state(spark, crawl("delta", "delta", 3)) == rewrite
+    # killed after round 0, resumed under the per-round auto mode
+    crawl("resumed", "auto", 1)
+    assert _crawl_state(spark, crawl("resumed", "auto", 3)) == rewrite
+
+
+class _FailsInRound1(CorpusJoinFetcher):
+    """Round 1's fetch fails when it EXECUTES — inside the commit writes,
+    after the loop has persisted that round's caches."""
+
+    def __init__(self, pages):
+        super().__init__(pages)
+        self.rounds = 0
+
+    def fetch(self, batch):
+        self.rounds += 1
+        out = super().fetch(batch)
+        if self.rounds == 2:
+            out = out.filter(F.raise_error(F.lit("injected fetch failure")).isNull())
+        return out
+
+
+def test_loop_releases_caches_and_restores_aqe(spark, pages120, tmp_path):
+    """Every cache the loop persists (per-round caches, LSM probe parts,
+    the resume-path part) is gone after run_crawl returns or raises, and the
+    session's AQE setting is restored either way."""
+    pages120.count()  # the caller's cache is not the loop's
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def assert_clean():
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+
+    def cfg(max_rounds):
+        # budgeted delta frontier with compaction at round 1 and round 3
+        return CrawlConfig(
+            max_rounds=max_rounds, host_budget=5, frontier_mode="delta",
+            compact_every=2,
         )
-        outs[pin] = {
-            name: sorted(map(tuple, read_output(spark, ck, name).collect()))
-            for name in ("vertices", "edges", "seen")
-        }
-    assert outs["off"] == outs["disk"]
+
+    seeds = [doc_url(0)]
+    ok = str(tmp_path / "ok")
+    run_crawl(spark, pages120, seeds, ok, cfg(3))
+    assert_clean()
+    ref = _crawl_state(spark, ok)
+    res = run_crawl(spark, pages120, seeds, ok, cfg(5))
+    assert res["start_round"] == 3
+    assert_clean()
+
+    failed = str(tmp_path / "failed")
+    with pytest.raises(PySparkException, match="injected fetch failure"):
+        run_crawl(
+            spark, pages120, seeds, failed, cfg(3), fetcher=_FailsInRound1(pages120)
+        )
+    assert_clean()
+    # the failed round never committed; a resume redoes it exactly
+    res = run_crawl(spark, pages120, seeds, failed, cfg(3))
+    assert res["start_round"] == 1
+    assert_clean()
+    assert _crawl_state(spark, failed) == ref
