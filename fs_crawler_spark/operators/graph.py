@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schemas import ASSUMED_BIOLOGICAL, RESOLVE, UNTYPED_PARENT
+from ..session import local_frame
 
 # Type sets from the reference validator/reader.
 RELATIONSHIP_VALIDATIONS = ("BiologicalParent", "UnspecifiedParentType")
@@ -433,8 +434,8 @@ def with_positions(
         offsets[r["pid"]] = acc
         acc += r["count"]
     spark = vertices.sparkSession
-    offset_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "pid int, _offset long"
+    offset_df = local_frame(
+        spark, [(pid, off) for pid, off in offsets.items()], "pid int, _offset long"
     )
     # local rank within the CAPTURED pre-shuffle partition + its broadcast
     # offset reproduces the global dense rank exactly

@@ -71,10 +71,12 @@ def select_batch(
     is trivially true for every bypassed row).
 
     ``host_stats=(n_hosts, n_over)`` supplies the two ints from outside and
-    skips the eager aggregate entirely — the crawl loop computes them as two
-    extra legs of its per-round committed-counts job (one job instead of
-    two, and never against an unpersisted multi-round delta-frontier
-    reconstruction). Standalone callers omit it and pay the one small
+    skips the eager aggregate entirely — the crawl loop supplies them in
+    every round, round 0 included, as extra legs of its counts jobs (the
+    per-round committed-counts job, and the prologue job that each
+    ``run_crawl`` call runs before its first round), never as a separate
+    job against an unpersisted multi-round delta-frontier reconstruction.
+    Standalone callers omit it and pay the one small
     aggregate; the frontier they pass is either a committed-parquet read or
     a caller-persisted DataFrame, so the job is a map-side-combined count —
     tiny next to the two full broadcast-join passes the blind split always

@@ -30,9 +30,12 @@ Scale notes (10^10-URL frontier, 1000 executors):
   * round metrics (the reference's LOG row, A9) come from ONE counts job per
     round over the committed snapshot — parquet footer counts, plus next
     round's politeness host stats and the LSM probe-part cache fill riding
-    the same job (``_committed_counts``). ``DataFrame.observe`` only feeds
-    the cosmetic dedup metric: observations race under the commit's
-    concurrent writes.
+    the same job (``_committed_counts``); each ``run_crawl`` call runs one
+    more such job as its prologue. ``DataFrame.observe`` only feeds the
+    cosmetic dedup metric: observations race under the commit's concurrent
+    writes;
+  * frames built on the driver (seeds, log totals) are Arrow-local
+    relations (``local_frame``): no job forks Python tasks to re-read them.
 """
 
 from __future__ import annotations
@@ -57,6 +60,7 @@ from ..operators.frontier import (
 from ..operators.politeness import select_batch
 from ..operators.robots import robots_gate
 from ..schemas import CRAWL_LOG, UNTYPED_PARENT
+from ..session import local_frame
 from ..sources.checkpoint import CheckpointStore
 from ..sources.fetcher import CorpusJoinFetcher, Fetcher
 
@@ -132,81 +136,93 @@ class RoundPlan(NamedTuple):
     spool: DataFrame | None  # politeness rank-1 subplan (persist per round)
 
 
+def _tn_rows(agg: DataFrame, names: list[str]) -> DataFrame:
+    """A one-row aggregate's long columns ``names`` as (t, n) rows."""
+    pairs = [c for name in names for c in (F.lit(name), F.col(name))]
+    return agg.select(F.explode(F.create_map(*pairs)).alias("t", "n"))
+
+
 def _committed_counts(
     spark: SparkSession,
     store,
-    round_i: int,
-    frontier_next: DataFrame | None = None,
+    round_i: int | None,
+    frontier: DataFrame | None = None,
     host_budget: int | None = None,
     materialize: DataFrame | None = None,
 ) -> dict[str, int]:
-    """Exact per-round counts from the committed snapshot in ONE job: a
-    union of per-table count aggregates (parquet footer metadata — no data
-    pages are read). Authoritative where observations can race (see caller).
-    ``batch`` = sum of the committed per-partition lineage rows.
+    """Exact counts from committed state in ONE job: a union of per-table
+    count aggregates (parquet footer metadata — no data pages are read).
+    Authoritative where observations can race (see caller).
 
-    ``frontier_next``/``host_budget`` (the loop's budgeted path) add one more
-    leg: next round's politeness host stats — (#hosts, #hosts over budget) of
-    the next frontier, exploded into two (t, n) rows off a single scan. This
-    folds select_batch's eager shape-picking aggregate into the SAME job
-    (one job per round instead of two).
+    With ``round_i`` (a committed round) the legs are its ``vertices`` /
+    ``edges`` / ``frontier`` table counts, ``batch`` (the sum of the
+    round's committed per-partition lineage rows) and ``totals`` (the
+    number of round-total log rows of iteration ``round_i`` — the resume
+    check for a totals row lost in a crash).
+
+    ``frontier`` adds ``rows`` (its row count), and with ``host_budget``
+    also the politeness host stats ``hosts`` / ``over`` (#hosts, #hosts
+    over budget) off a single scan — select_batch's eager shape-picking
+    aggregate folded into the SAME job.
 
     ``materialize`` (optional) rides one more count leg over a persisted
     DataFrame purely to populate its cache inside this job — the loop
-    passes the round's LSM seen-probe part here, which used to cost a
-    dedicated per-round job (+ its scheduling gap)."""
+    passes the LSM seen-probe part here, which used to cost a dedicated
+    job (+ its scheduling gap).
+
+    The loop runs this once per round (``round_i`` = the round just
+    committed, ``frontier`` = the next frontier when budgeted) and once as
+    the prologue of each ``run_crawl`` call: the starting frontier's size
+    and host stats, plus, on resume, the last committed round's counts and
+    the first probe part's fill."""
     legs = []
-    for name in ("vertices", "edges", "frontier"):
-        legs.append(
-            store.read(spark, round_i, name)
-            .groupBy()
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(name).alias("t"), F.col("n"))
+
+    def count_leg(df: DataFrame, name: str) -> DataFrame:
+        return df.groupBy().agg(F.count(F.lit(1)).alias("n")).select(
+            F.lit(name).alias("t"), F.col("n")
         )
-    legs.append(
-        store.read(spark, round_i, "crawl_log")
-        .filter(F.col("partition_id") >= 0)
-        .filter(F.col("iteration") == round_i)
-        .groupBy()
-        .agg(F.coalesce(F.sum("urls_in"), F.lit(0)).alias("n"))
-        .select(F.lit("batch").alias("t"), F.col("n"))
-    )
-    if frontier_next is not None and host_budget is not None:
-        host_counts = frontier_next.groupBy("host").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
+
+    if round_i is not None:
+        for name in ("vertices", "edges", "frontier"):
+            legs.append(count_leg(store.read(spark, round_i, name), name))
+        pid = F.col("partition_id")
         legs.append(
-            host_counts.groupBy()
-            .agg(
-                F.count(F.lit(1)).alias("hosts"),
-                F.coalesce(
-                    F.sum((F.col("_n") > host_budget).cast("long")),
-                    F.lit(0).cast("long"),
-                ).alias("over"),
-            )
-            .select(
-                F.explode(
-                    F.create_map(
-                        F.lit("hosts"),
-                        F.col("hosts"),
-                        F.lit("over"),
-                        F.col("over"),
-                    )
-                ).alias("t", "n")
+            _tn_rows(
+                store.read(spark, round_i, "crawl_log")
+                .filter(F.col("iteration") == round_i)
+                .groupBy()
+                .agg(
+                    F.coalesce(
+                        F.sum(F.when(pid >= 0, F.col("urls_in"))), F.lit(0)
+                    ).cast("long").alias("batch"),
+                    F.count(F.when(pid == -1, F.lit(1))).alias("totals"),
+                ),
+                ["batch", "totals"],
             )
         )
+    if frontier is not None and host_budget is not None:
+        host_counts = frontier.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
+        legs.append(
+            _tn_rows(
+                host_counts.groupBy().agg(
+                    F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("rows"),
+                    F.count(F.lit(1)).alias("hosts"),
+                    F.coalesce(
+                        F.sum((F.col("_n") > host_budget).cast("long")),
+                        F.lit(0).cast("long"),
+                    ).alias("over"),
+                ),
+                ["rows", "hosts", "over"],
+            )
+        )
+    elif frontier is not None:
+        legs.append(count_leg(frontier, "rows"))
     if materialize is not None:
-        legs.append(
-            materialize.groupBy()
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("_materialize").alias("t"), F.col("n"))
-        )
+        legs.append(count_leg(materialize, "_materialize"))
     u = legs[0]
     for df in legs[1:]:
         u = u.unionByName(df)
     return {r["t"]: int(r["n"]) for r in u.collect()}
-
-
 
 
 def _load_frontier(spark: SparkSession, store, up_to_round: int) -> DataFrame:
@@ -258,7 +274,7 @@ def load_frontier(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
 
 
 def seed_frontier(spark: SparkSession, seeds: list[str]) -> DataFrame:
-    raw = spark.createDataFrame([(u,) for u in seeds], "url string")
+    raw = local_frame(spark, [(u,) for u in seeds], "url string")
     return dedup_frontier(as_frontier_rows(raw, discovered_iter=0))
 
 
@@ -584,8 +600,6 @@ def _run_crawl_loop(
         frontier = _load_frontier(spark, store, latest)
         seen = store.read_union(spark, "seen", up_to_round=latest)
         seen_parts = [_as_part(seen)]
-        # filled now, in its own job: no counts job has run for it yet
-        seen_parts[0].count()
         start_round = latest + 1
     else:
         # robots gate the seeds too: a blocked seed must never be fetched,
@@ -596,57 +610,57 @@ def _run_crawl_loop(
         seen_parts = []
         start_round = 0
 
+    # The prologue: ONE counts job before the first round — the starting
+    # frontier's size and politeness host stats (round 0 receives them the
+    # way later rounds receive them from the per-round counts job) and, on
+    # resume, the first probe part's cache fill plus the last committed
+    # round's counts for the totals recovery below (a round committed
+    # without a crawl_log has no log row to recover).
+    manifest = store.manifest(latest) if latest is not None else {"tables": []}
+    recover = "crawl_log" in manifest["tables"]
+    stats = _committed_counts(
+        spark,
+        store,
+        latest if recover else None,
+        frontier=frontier,
+        host_budget=cfg.host_budget,
+        materialize=seen_parts[0] if seen_parts else None,
+    )
+    urls_in = stats["rows"]  # then carried from the previous round's counts
+    host_stats = (
+        (stats["hosts"], stats["over"]) if cfg.host_budget is not None else None
+    )
     rounds_run = 0
     total_fetched = 0
-    urls_in: int | None = None  # carried from the previous round's counts
     # Round-total log rows need counts of the committed round, so round
-    # r's totals PIGGYBACK on round r+1's crawl_log write
-    # (zero extra jobs); the final round's totals flush once after the loop.
+    # r's totals PIGGYBACK on round r+1's crawl_log write (zero extra
+    # jobs); the final round's totals flush once after the loop.
     pending_totals: list[tuple] = []
     prev_batch_n: int | None = None  # feeds the auto frontier-mode heuristic
-    if latest is not None:
+    if recover and stats["totals"] == 0:
         # A crash between round `latest`'s commit and the next one loses
         # exactly that round's totals row (it would have piggybacked on the
-        # next commit). Re-derive it from the committed counts so the log
-        # export never silently skews cumulative counts. Duration and the
-        # dedup metric are unrecoverable -> 0.
-        try:
-            has_totals = (
-                store.read(spark, latest, "crawl_log")
-                .filter(
-                    (F.col("partition_id") == -1) & (F.col("iteration") == latest)
-                )
-                .limit(1)
-                .count()
-                > 0
+        # next commit). Re-derive it from the committed counts (the
+        # frontier gauge is the reconstructed frontier's size, whatever the
+        # round's frontier mode) so the log export never silently skews
+        # cumulative counts. Duration and the dedup metric are
+        # unrecoverable -> 0.
+        pending_totals.append(
+            (
+                latest,
+                -1,
+                0.0,
+                stats["vertices"],
+                urls_in,
+                stats["edges"],
+                stats["batch"],
+                stats["vertices"],
+                0,
+                int(manifest.get("snapshot_id", 0)),
             )
-        except Exception:
-            has_totals = False
-        if not has_totals:
-            stats = _committed_counts(spark, store, latest)
-            if store.manifest(latest).get("meta", {}).get("frontier_full", True):
-                n_front = int(stats["frontier"])
-            else:  # committed table is a delta; count the reconstruction
-                n_front = frontier.count()
-            pending_totals.append(
-                (
-                    latest,
-                    -1,
-                    0.0,
-                    int(stats["vertices"]),
-                    n_front,
-                    int(stats["edges"]),
-                    int(stats["batch"]),
-                    int(stats["vertices"]),
-                    0,
-                    int(store.manifest(latest).get("snapshot_id", 0)),
-                )
-            )
-    host_stats: tuple[int, int] | None = None  # piggybacked on counts job
+        )
     for round_i in range(start_round, cfg.max_rounds):
         t0 = time.monotonic()
-        if urls_in is None:
-            urls_in = frontier.count()
         if urls_in == 0:
             break
         if not probe_n_warned:
@@ -711,7 +725,7 @@ def _run_crawl_loop(
         )
         if pending_totals:
             log_parts = log_parts.unionByName(
-                spark.createDataFrame(pending_totals, CRAWL_LOG)
+                local_frame(spark, pending_totals, CRAWL_LOG)
             )
             pending_totals = []
 
@@ -822,7 +836,7 @@ def _run_crawl_loop(
             spark,
             store,
             round_i,
-            frontier_next=frontier_next if cfg.host_budget is not None else None,
+            frontier=frontier_next if cfg.host_budget is not None else None,
             host_budget=cfg.host_budget,
             materialize=next_part,
         )
@@ -900,13 +914,12 @@ def _run_crawl_loop(
         )
 
     if pending_totals:
-        # flush the final round's totals (one append for the whole run;
-        # NOTE: no coalesce(1) — coalescing a 1-row local relation costs
-        # ~6 s of fixed overhead per write on this Spark build)
+        # flush the final round's totals: one append of a local relation
+        # (a LocalTableScan — the write forks no Python worker)
         store.append(
             start_round + rounds_run - 1,
             "crawl_log",
-            spark.createDataFrame(pending_totals, CRAWL_LOG),
+            local_frame(spark, pending_totals, CRAWL_LOG),
         )
 
     return {

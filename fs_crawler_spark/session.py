@@ -4,13 +4,40 @@ One place for the physical-execution knobs the engine relies on at scale:
 AQE (runtime re-plan + skew-join splitting for hot hosts), Arrow for the
 pandas-UDF extraction path, and a shuffle-partition count sized to the
 sandbox (local[32]); on a real cluster this is set per-job via spark-submit.
+Also the one constructor for frames built on the driver (``local_frame``).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType | str
+) -> DataFrame:
+    """A driver-built frame that plans as a ``LocalTableScan``.
+
+    ``createDataFrame`` over a Python list plans as a Python-RDD scan, so
+    every job that reads the frame forks Python tasks to re-read it
+    (measured ~0.3 s per read at local[4]). A ``pyarrow.Table`` is shipped
+    to the JVM once and always takes the Arrow path, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. ``rows`` are tuples
+    in ``schema`` order; an empty list gives a typed empty frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.graph import classify_edges, save_valid_graph
+from ..session import local_frame
 
 VERTEX_HEADER = ["#external_id", "color", "name", "iteration", "lifespan"]
 EDGE_HEADER = [
@@ -335,7 +336,8 @@ class CrawlCsvAppender:
         n_edges_all = e_all.count()
         n_vertices = v_all.count()
         n_frontier = frontier.count()
-        row = spark.createDataFrame(
+        row = local_frame(
+            spark,
             [
                 (
                     round_i,

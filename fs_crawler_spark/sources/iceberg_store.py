@@ -49,6 +49,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from .iceberg_backend import SparkIcebergBackend
 
 APPEND_TABLES = ("seen", "vertices", "edges", "crawl_log")
@@ -220,9 +221,7 @@ class IcebergCheckpointStore:
         return snapshot_id
 
     def _append_manifest_row(self, manifest: dict[str, Any]) -> None:
-        row_df = self.spark.createDataFrame(
-            [encode_manifest(manifest)], _MANIFEST_SCHEMA
-        )
+        row_df = local_frame(self.spark, [encode_manifest(manifest)], _MANIFEST_SCHEMA)
         mode = "append" if self._exists(MANIFEST_TABLE) else "create"
         self.backend.write(self._tbl(MANIFEST_TABLE), row_df, mode)  # commit point
 

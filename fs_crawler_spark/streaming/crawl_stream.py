@@ -82,7 +82,13 @@ def _read_optional(spark: SparkSession, path: str, ddl: str) -> DataFrame | None
         # ONLY "first batch: nothing committed yet" is recoverable. A corrupt
         # or unreadable seen dir must fail loudly — treating it as absent
         # would skip the seen anti-join and silently re-crawl everything.
-        if "PATH_NOT_FOUND" not in str(e):
+        # Match the error condition; the message text is only a fallback
+        # for an exception that carries none.
+        cond = e.getCondition()
+        missing = (
+            cond == "PATH_NOT_FOUND" if cond else "PATH_NOT_FOUND" in str(e)
+        )
+        if not missing:
             raise
         return None
 

@@ -310,3 +310,77 @@ def test_loop_releases_caches_and_restores_aqe(spark, pages120, tmp_path):
     assert res["start_round"] == 1
     assert_clean()
     assert _crawl_state(spark, failed) == ref
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_driver_frames_are_local_table_scans(spark, arrow):
+    """The seed frontier and the crawl_log totals frame plan as a
+    LocalTableScan, never a Python-RDD scan (ExistingRDD) whose every
+    re-read forks Python tasks, whatever the Arrow conf says. The seed
+    rows equal the Python-list construction's: empty, non-ASCII and
+    duplicate seeds."""
+    from fs_crawler_spark.operators.frontier import as_frontier_rows, dedup_frontier
+    from fs_crawler_spark.plans.crawl import seed_frontier
+    from fs_crawler_spark.schemas import CRAWL_LOG
+    from fs_crawler_spark.session import local_frame
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        def assert_local(df):
+            plan = _plan(df)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+        totals = local_frame(spark, [(0, -1, 1.5, 3, 4, 5, 6, 3, 2, 99)], CRAWL_LOG)
+        assert_local(totals)
+        assert totals.schema == CRAWL_LOG
+        assert totals.collect()[0]["snapshot_id"] == 99
+        assert local_frame(spark, [], CRAWL_LOG).schema == CRAWL_LOG
+        for seeds in (
+            [],
+            [doc_url(0), "http://bücher.example/straße?q=ü", "http://例え.jp/パス"],
+            [doc_url(0), doc_url(1), doc_url(0), "HTTP://Hub.Example.com/doc/1"],
+        ):
+            f = seed_frontier(spark, seeds)
+            assert_local(f)
+            old = dedup_frontier(
+                as_frontier_rows(
+                    spark.createDataFrame([(u,) for u in seeds], "url string"), 0
+                )
+            )
+            assert f.schema == old.schema
+            assert sorted(map(tuple, f.collect())) == sorted(
+                map(tuple, old.collect())
+            )
+    finally:
+        spark.conf.set(key, before)
+
+
+# Jobs a budgeted delta-mode crawl of pages120 submits: round 0 stopped by
+# max_rounds, then a resumed call running round 1. Every job the loop adds
+# (or removes) moves this pin; update it on purpose.
+CRAWL_JOB_BUDGET = 25
+
+
+def test_crawl_job_budget(spark, pages120, tmp_path):
+    pages120.count()  # a materialized cache: stable broadcast decisions
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def last_job_id() -> int:
+        # job-start events reach the tracker through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    d = str(tmp_path / "c")
+    cfg = dict(host_budget=5, frontier_mode="delta", compact_every=4)
+    start = last_job_id()
+    run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=1, **cfg))
+    res = run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=2, **cfg))
+    assert res["start_round"] == 1 and res["rounds"] == 1
+    assert last_job_id() - start == CRAWL_JOB_BUDGET

@@ -90,3 +90,42 @@ def test_read_optional_missing_vs_error(spark, tmp_path):
     assert _read_optional(spark, str(tmp_path / "nope"), ddl) is None
     with _pytest.raises(Exception):
         _read_optional(spark, "", ddl)  # invalid path: not a first-batch case
+
+
+def test_read_optional_matches_condition_not_text(spark, tmp_path):
+    """A missing path is the only recoverable read error, decided by the
+    error condition: a different AnalysisException whose message merely
+    mentions PATH_NOT_FOUND (say, in a path) still raises, and the
+    message text is consulted only when no condition is set."""
+    import pytest as _pytest
+    from pyspark.errors import AnalysisException
+
+    from fs_crawler_spark.streaming.crawl_stream import FRONTIER_DDL, _read_optional
+
+    ddl = FRONTIER_DDL + ", shard int"
+    assert _read_optional(spark, str(tmp_path / "nope"), ddl) is None
+    with _pytest.raises(AnalysisException):
+        _read_optional(spark, str(tmp_path / "nope"), "url string string")
+
+    class _Raises:
+        def __init__(self, exc):
+            self.exc = exc
+
+        @property
+        def read(self):
+            return self
+
+        def schema(self, ddl):
+            return self
+
+        def parquet(self, path):
+            raise self.exc
+
+    other = AnalysisException(
+        message="[UNABLE_TO_INFER_SCHEMA] /data/PATH_NOT_FOUND/seen",
+        errorClass="UNABLE_TO_INFER_SCHEMA",
+    )
+    with _pytest.raises(AnalysisException):
+        _read_optional(_Raises(other), "/data/PATH_NOT_FOUND/seen", ddl)
+    untagged = AnalysisException(message="[PATH_NOT_FOUND] Path does not exist")
+    assert _read_optional(_Raises(untagged), "/x", ddl) is None
